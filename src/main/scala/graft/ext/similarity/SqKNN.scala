@@ -65,17 +65,11 @@ object SqKNN {
     SqParams(mn, (mx - mn) / levels)
   }
 
-  /** [[trainedRange]] memoized per corpus snapshot, like the IVF/PQ
-    * codebooks — train once per corpus, reuse across queries. The key
-    * folds in [[IvfKNN.snapshotToken]] (file length + mtime), not just
-    * the caller tag: a corpus regenerated in place within one JVM must
-    * invalidate the trained (mn, s) or its codes would hash-mismatch
-    * the oracle (round-7 ADVICE). */
-  private val rangeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, SqParams]()
+  /** [[trainedRange]], reused per corpus snapshot under the
+    * [[graft.ArtifactCache]] rule, like the IVF/PQ codebooks — train
+    * once per corpus, reuse across queries. */
   def cachedRange(corpus: DataFrame, vecCol: String, tag: String): SqParams =
-    rangeMemo.computeIfAbsent(tag + "@" + IvfKNN.snapshotToken(corpus),
-      _ => trainedRange(corpus, vecCol))
+    graft.ArtifactCache.ofFrame(corpus, "sq_range", tag, vecCol)(trainedRange(corpus, vecCol))
 
   /** SQ codes of a vector: `array<int>` with one [0, 255] code per
     * dimension. Pure projection. */

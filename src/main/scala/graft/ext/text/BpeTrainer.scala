@@ -171,33 +171,16 @@ object BpeTrainer {
     } else (learned.reduce(_.union(_)), words)
   }
 
-  private val trainMemo = new scala.collection.concurrent.TrieMap[
-    (String, String, Int), (DataFrame, DataFrame)]
-
-  /** [[train]] memoized per (corpus snapshot, text column, merge
-    * count) — a tokenizer is an AT-REST artifact like an IVF
-    * codebook: trained once when the corpus is built, reused by every
-    * query; retraining per query would bill build cost to query
-    * latency. The snapshot token (file lengths + mtimes,
-    * [[graft.ext.similarity.IvfKNN.snapshotToken]]) invalidates the
-    * entry when the corpus is rewritten in place. Memoized frames are
-    * vocabulary-sized checkpoints — bounded session state. */
+  /** [[train]], reused per corpus snapshot, text column and merge
+    * count under the [[graft.ArtifactCache]] rule — a tokenizer is an
+    * AT-REST artifact like an IVF codebook: trained once, reused by
+    * every query. The frames are vocabulary-sized checkpoints, freed
+    * by [[graft.ArtifactCache.clear]]. */
   def cachedTrain(docs: DataFrame, textCol: String, numMerges: Int,
       source: String): (DataFrame, DataFrame) =
-    trainMemo.getOrElseUpdate(
-      (source + "@" + graft.ext.similarity.IvfKNN.snapshotToken(docs),
-        textCol, numMerges),
-      train(docs, textCol, numMerges))
-
-  /** Drop the training memo (ScaleBench min-of-N builds: the second
-    * rep must retrain, not hit the memo), freeing the checkpointed
-    * RDDs it pinned. */
-  private[graft] def clearTrainMemo(): Unit = {
-    trainMemo.values.foreach { case (m, w) =>
-      freeCheckpoint(m); freeCheckpoint(w)
-    }
-    trainMemo.clear()
-  }
+    graft.ArtifactCache.ofFrame(docs, "bpe", source, textCol, numMerges)(
+      train(docs, textCol, numMerges),
+      (mw: (DataFrame, DataFrame)) => { freeCheckpoint(mw._1); freeCheckpoint(mw._2) })
 
   /** Per-document piece statistics under a trained tokenizer:
     * (idCol, n_tokens, n_pieces, pieces_per_token). The per-word

@@ -8,6 +8,7 @@ import graft.config.EntitySchema
 import graft.meta.{HandlerExecution, MonitorStore}
 import graft.operators.{Dedup, EntitySplit, KeyGen, Normalize}
 import graft.sinks.ParquetUpsertSink
+import graft.sources.JsonLinesSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Handler (reference entry point 3, `src/handler/handler.py`):
@@ -76,7 +77,11 @@ object HandlerJob {
 
     val staged = spark.read.parquet(stagedPath.get).cache()
     try {
-      val byEntity = EntitySplit(staged, "on", schemas.map(_.entity))
+      // malformed lines are skipped, as the reference does: Spark
+      // partly parses a line cut at a field boundary, so its row would
+      // otherwise reach the warehouse with a null entity id
+      val good = staged.filter(staged(JsonLinesSource.corruptCol).isNull)
+      val byEntity = EntitySplit(good, "on", schemas.map(_.entity))
       val outcomes = schemas.map { schema =>
         val entity = schema.entity
         // cache: the audit count and the upsert both consume the
@@ -100,7 +105,7 @@ object HandlerJob {
             "entity" -> entity, "table" -> schema.targetTable, "rows" -> n)
           entity -> Right(n)
         } catch {
-          case e: Throwable =>
+          case scala.util.control.NonFatal(e) =>
             // full stack trace, matching the reference's traceback
             // capture (src/helper/postgres.py:45-63)
             log.error("entity failed", e, "workflow" -> workflowId,

@@ -70,7 +70,7 @@ object IngestorJob {
         "staged" -> staged.getOrElse("-"))
       Result(hour, files.size, staged)
     } catch {
-      case e: Throwable =>
+      case scala.util.control.NonFatal(e) =>
         log.error("ingestor failed", e, "workflow" -> workflowId,
           "execution" -> executionId, "hour" -> hour)
         store.recordIngestor(IngestorExecution(

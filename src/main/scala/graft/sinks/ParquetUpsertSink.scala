@@ -87,7 +87,7 @@ object ParquetUpsertSink {
         }
       val p = new Path(path)
       if (!f.exists(p)) 0L else walk(p)
-    } catch { case _: Throwable => -1L }
+    } catch { case scala.util.control.NonFatal(_) => -1L }
 
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

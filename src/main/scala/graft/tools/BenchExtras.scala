@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
 object AtRestBuilds {
 
   /** (name, build action). Each action is idempotent per session —
-    * builds land in the same memos the registered queries consume, so
+    * builds land in the ArtifactCache the registered queries consume, so
     * the query loop that follows measures steady state. */
   def all: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "ivf_exact_codebook_iter1" -> { (s, dir) =>
@@ -49,7 +49,7 @@ object AtRestBuilds {
       ()
     },
     "bucketed_layout" -> { (s, dir) =>
-      graft.ScaleQueries.ensureBucketedLayout(s, dir)
+      graft.ScaleQueries.bucketedTables(s, dir)
     },
     // BPE tokenizer training (8 merges over the documents vocabulary)
     // — the at-rest artifact behind docs_bpe_merges/docs_bpe_tokenize
